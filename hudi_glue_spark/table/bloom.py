@@ -272,7 +272,12 @@ def from_bytes(raw: bytes) -> dict:
         "k": k,
         "arr": np.frombuffer(raw[8:], dtype=np.uint8),
     }
-    kind = _CODE_KIND.get(code, "md5")
+    kind = _CODE_KIND.get(code)
+    if kind is None:
+        # a family this reader does not know (a newer writer's):
+        # probing it with another family's hash gives silent false
+        # negatives, so refuse rather than guess
+        raise ValueError(f"unknown bloom hash family code {code}")
     if kind != "md5":
         out["h"] = kind
     return out

@@ -104,23 +104,6 @@ def union(a: bytes, b: bytes) -> bytes:
     return _HDR.pack(MAGIC, na, int(bits.sum())) + payload
 
 
-# -- transport: executor → driver position lists ----------------------------
-
-
-def encode_positions(positions) -> bytes:
-    """Compressed uint64 position list — the per-file payload an
-    executor ships to the driver when marking rows dead (O(marked
-    rows) bytes, compressed; the driver unions it into the bitmap)."""
-    pos = np.asarray(positions, dtype=np.uint64)
-    return zlib.compress(np.sort(pos).tobytes(), 1)
-
-
-def decode_positions(blob: bytes) -> np.ndarray:
-    return np.frombuffer(zlib.decompress(blob), dtype=np.uint64).astype(
-        np.int64
-    )
-
-
 # -- blob IO -----------------------------------------------------------------
 
 #: tiny immutable-blob cache (DV files never change once published)

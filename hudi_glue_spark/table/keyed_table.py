@@ -45,7 +45,15 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
 from hudi_glue_spark.table import bloom as B
@@ -152,6 +160,13 @@ def _parquet_footer_stats(path: str, cols: list[str]) -> tuple[int, dict]:
         if ok and lo is not None:
             out[col] = [_stat_value(lo), _stat_value(hi)]
     return md.num_rows, out
+
+
+def _split_bytes(spark) -> int:
+    """The session's scan-split size (``spark.sql.files.maxPartitionBytes``):
+    commit bookkeeping whose input fits one split runs on the driver
+    with pyarrow; anything bigger keeps the distributed path."""
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
 
 
 @dataclass
@@ -1253,37 +1268,82 @@ class KeyedTable:
             return None
         try:
             reg_full = RI.resolve_reg(self.path, reg)
-            ent = self._rli_entries_for_files(
-                spark, new_names, int(reg_full["seq"]), reg_full["key"], schema
-            )
-            # delta-size gate for the one-job single-segment write:
-            # the (key, file, seq) entries of a commit whose new data
-            # files total under the scan-split size trivially fit one
-            # task; bigger deltas keep the parallel global sort
-            ddir = M.data_dir(self.path)
-            small = True
-            total = 0
-            for f in new_names:
-                try:
-                    total += os.path.getsize(os.path.join(ddir, f))
-                except OSError:
-                    small = False
-                    break
-                if total > 128 * 1024 * 1024:
-                    small = False
-                    break
-            spans = RI.write_entries(
-                ent, self.path, cid, reg_full["key"], single_segment=small
-            )
+            k, seq = reg_full["key"], int(reg_full["seq"])
+            ent = self._rli_entries_arrow(spark, new_names, seq, k, schema)
+            if ent is not None:
+                spans = RI.write_entries_arrow(ent, self.path, cid, k)
+            else:
+                spans = RI.write_entries(
+                    self._rli_entries_for_files(
+                        spark, new_names, seq, k, schema
+                    ),
+                    self.path,
+                    cid,
+                    k,
+                )
         except Exception:  # noqa: BLE001 — drop honestly, never corrupt
             return None
         deltas = dict(reg_full.get("deltas") or {})
         deltas.update(spans)
         return {
             **reg_full,
-            "seq": int(reg_full["seq"]) + 1,
+            "seq": seq + 1,
             "deltas": deltas,
         }
+
+    def _rli_entries_arrow(
+        self,
+        spark: SparkSession,
+        files: list[str],
+        seq: int,
+        key_col: str,
+        schema: StructType,
+    ):
+        """The delta's (key, file, seq) entries as a pyarrow table
+        built on the driver — or None when the new files total more
+        than one scan split, the key type has no exact arrow twin
+        here, or the key is a partition column (its values live in the
+        directory names, which the Spark scan decodes)."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        field = next(f for f in schema.fields if f.name == key_col)
+        atype = {
+            ByteType: pa.int8(),
+            ShortType: pa.int16(),
+            IntegerType: pa.int32(),
+            LongType: pa.int64(),
+            StringType: pa.string(),
+        }.get(type(field.dataType))
+        if atype is None or key_col in (self.partition_by or []):
+            return None
+        ddir = M.data_dir(self.path)
+        paths = [os.path.join(ddir, f) for f in files]
+        if sum(os.path.getsize(p) for p in paths) > _split_bytes(spark):
+            return None
+        cols = []
+        for p in paths:
+            try:
+                t = pq.read_table(p, columns=[key_col])
+            except pa.ArrowInvalid:
+                return None  # column not in the file: Spark NULL-fills
+            cols.append(t.column(key_col).cast(atype))
+        lengths = [len(c) for c in cols]
+        # the file column stays dictionary-encoded through the sort and
+        # the write: a rewrite-sized delta's names would otherwise
+        # cost more driver memory than its keys
+        host = pa.DictionaryArray.from_arrays(
+            np.repeat(np.arange(len(files), dtype=np.int32), lengths),
+            pa.array(files, pa.string()),
+        )
+        return pa.table(
+            {
+                key_col: pa.chunked_array(cols, type=atype),
+                "file": host,
+                "seq": pa.array(np.full(sum(lengths), seq, dtype=np.int64)),
+            }
+        )
 
     def files_hosting_keys(
         self, spark: SparkSession, keys, man=None
@@ -1425,14 +1485,20 @@ class KeyedTable:
             names = RI.prune_isin(segs, norm)
             if not names:
                 return []
-            ent = RI.entries_df(spark, self.path, names, kfield)
-            cand = (
-                ent.filter(F.col(k).isin(probes))
-                .select("file")
-                .distinct()
-                .collect()
+            found = RI.probe_hosts(
+                self.path, names, k, probes, _split_bytes(spark)
             )
-            hits = [r["file"] for r in cand]
+            if found is not None:
+                hits = sorted(found)
+            else:
+                ent = RI.entries_df(spark, self.path, names, kfield)
+                cand = (
+                    ent.filter(F.col(k).isin(probes))
+                    .select("file")
+                    .distinct()
+                    .collect()
+                )
+                hits = [r["file"] for r in cand]
         if not hits:
             return []
         mask = pc.is_in(
@@ -2955,42 +3021,39 @@ class KeyedTable:
         self, spark: SparkSession, man, marked: DataFrame, cid: str
     ) -> tuple[dict, int]:
         """Aggregate ``marked`` (``__file``, ``__pos`` of live rows) into
-        per-file deletion-vector blobs: positions compress executor-side
-        (one ``applyInPandas`` group per file — O(marked rows) shipped,
-        zlib'd), the driver unions each with the file's existing mask
-        and publishes immutable blobs under ``_dv/``. Returns
-        ({rel: [blob_name, n_dead]}, rows_marked)."""
+        per-file deletion-vector blobs: positions group per file in one
+        JVM aggregate (``collect_list``) and reach the driver as one
+        Arrow batch — O(marked rows) int64s, bounded by the callers'
+        mark-volume guard; the driver builds each file's bitmap, unions
+        it with the file's existing mask and publishes immutable blobs
+        under ``_dv/``. Returns ({rel: [blob_name, n_dead]},
+        rows_marked)."""
         import uuid
 
-        import pandas as pd
-
-        def _pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            return pd.DataFrame(
-                {
-                    "file": [pdf["__file"].iloc[0]],
-                    "blob": [
-                        DVB.encode_positions(pdf["__pos"].to_numpy())
-                    ],
-                    "n": [len(pdf)],
-                }
-            )
+        import numpy as np
+        import pyarrow.compute as pc
 
         per_file = (
-            marked.select("__file", "__pos")
-            .groupBy("__file")
-            .applyInPandas(_pack, "file string, blob binary, n long")
-            .collect()
+            marked.groupBy("__file")
+            .agg(F.collect_list("__pos").alias("pos"))
+            .toArrow()
         )
-        if not per_file:
+        if per_file.num_rows == 0:
             return {}, 0
+        per_file = per_file.sort_by("__file").combine_chunks()
+        pos = per_file.column("pos").chunk(0)
+        lengths = pc.list_value_length(pos).to_numpy()
+        per_pos = np.split(
+            pos.flatten().to_numpy(), np.cumsum(lengths)[:-1]
+        )
         frows = man.file_rows
         ddir = M.data_dir(self.path)
         token = uuid.uuid4().hex[:8]
         entries: dict = {}
-        total = 0
         live = set(man.files)
-        for i, r in enumerate(sorted(per_file, key=lambda r: r["file"])):
-            rel = r["file"]
+        for i, (rel, p) in enumerate(
+            zip(per_file.column("__file").to_pylist(), per_pos)
+        ):
             if rel not in live:
                 # a __file name that isn't a live manifest entry means
                 # the scan's path→rel mapping broke (e.g. URI-encoded
@@ -3002,15 +3065,14 @@ class KeyedTable:
             nrows = frows.get(rel)
             if nrows is None:  # legacy shard without a row count
                 nrows = _parquet_num_rows(os.path.join(ddir, rel))
-            blob = DVB.from_positions(DVB.decode_positions(r["blob"]), nrows)
+            blob = DVB.from_positions(p, nrows)
             old = man.dvs.get(rel)
             if old is not None:
                 blob = DVB.union(DVB.read(self.path, old[0]), blob)
             name = f"{cid}-{token}-{i:05d}.dv"
             DVB.write(self.path, name, blob)
             entries[rel] = [name, DVB.dead_count(blob)]
-            total += int(r["n"])
-        return entries, total
+        return entries, int(lengths.sum())
 
     def _dv_rewritten_dirs(self, rels) -> list[str]:
         if not self.partition_by:
@@ -3502,35 +3564,50 @@ class KeyedTable:
         hosts (bloom false negatives impossible; files without
         blooms/stats are kept), so a miss is impossible."""
         files = man.files
-        if self.key_scope == "partition" and self.partition_by:
+        scoped = self.key_scope == "partition" and bool(self.partition_by)
+        key = self.key[0] if len(self.key) == 1 else None
+        dirs = ks = None
+        if scoped and key is not None:
+            # one bounded collect answers both the partition scope and
+            # the key list: ``best`` holds one row per identity
+            # (partition, key), so the cap bounds both
+            cols = list(dict.fromkeys([*self.partition_by, key]))
+            rows = best.select(cols).limit(self.DV_KEY_PRUNE_CAP + 1).collect()
+            if len(rows) <= self.DV_KEY_PRUNE_CAP:
+                dirs = {self._dirname(r) for r in rows}
+                ks = list(dict.fromkeys(r[key] for r in rows))
+        if scoped and dirs is None:
             dirs = {
                 self._dirname(r)
                 for r in best.select(self.partition_by).distinct().collect()
             }
+        if dirs is not None:
             files = [
                 f for f in files if (M.partition_of(f) or "") in dirs
             ]
-        if len(self.key) == 1:
+        if key is None:
+            return files
+        if ks is None:
             ks = [
                 r[0]
-                for r in best.select(self.key[0])
+                for r in best.select(key)
                 .distinct()
                 .limit(self.DV_KEY_PRUNE_CAP + 1)
                 .collect()
             ]
-            if len(ks) <= self.DV_KEY_PRUNE_CAP:
-                pruned = set(self._dv_prune_files(man, ks))
-                files = [f for f in files if f in pruned]
-            else:
-                # over the driver cap: the record index (when built)
-                # tags candidates with ONE distributed join — the
-                # 100M-key backfill shape no driver-side probe survives
-                hosts = self.files_hosting_keys(
-                    best.sparkSession, best.select(self.key[0]), man=man
-                )
-                if hosts is not None:
-                    hs = set(hosts)
-                    files = [f for f in files if f in hs]
+        if len(ks) <= self.DV_KEY_PRUNE_CAP:
+            pruned = set(self._dv_prune_files(man, ks))
+            files = [f for f in files if f in pruned]
+        else:
+            # over the driver cap: the record index (when built)
+            # tags candidates with ONE distributed join — the
+            # 100M-key backfill shape no driver-side probe survives
+            hosts = self.files_hosting_keys(
+                best.sparkSession, best.select(key), man=man
+            )
+            if hosts is not None:
+                hs = set(hosts)
+                files = [f for f in files if f in hs]
         return files
 
     def drop_partitions(self, dirnames: list[str]) -> str:
@@ -6981,21 +7058,44 @@ class KeyedTable:
             # The index-hosts join and the batch's own partition set
             # are INDEPENDENT jobs — overlap them (guide §2.6): the
             # second job's tasks back-fill the first's tail.
+            import uuid
             from concurrent.futures import ThreadPoolExecutor
 
+            sc = batch.sparkSession.sparkContext
+            tag = f"index-probe-{uuid.uuid4().hex}"
+
+            def probe():
+                sc.addJobTag(tag)
+                try:
+                    return self.files_hosting_keys(
+                        batch.sparkSession,
+                        batch.select(self.key[0]).dropDuplicates(),
+                        man,
+                    )
+                finally:
+                    sc.removeJobTag(tag)
+
             with ThreadPoolExecutor(max_workers=1) as pool:
-                fut = pool.submit(
-                    self.files_hosting_keys,
-                    batch.sparkSession,
-                    batch.select(self.key[0]).dropDuplicates(),
-                    man,
-                )
-                parts = {
-                    self._dirname(r)
-                    for r in batch.select(self.partition_by)
-                    .distinct()
-                    .collect()
-                }
+                fut = pool.submit(probe)
+                try:
+                    parts = {
+                        self._dirname(r)
+                        for r in batch.select(self.partition_by)
+                        .distinct()
+                        .collect()
+                    }
+                except BaseException as e:
+                    # the probe's result is moot: cancel its job so the
+                    # pool's shutdown does not wait it out, and keep
+                    # its error visible next to this one
+                    sc.cancelJobsWithTag(tag)
+                    probe_err = fut.exception()
+                    if probe_err is not None:
+                        e.add_note(
+                            "overlapped record-index probe failed too: "
+                            f"{type(probe_err).__name__}: {probe_err}"
+                        )
+                    raise
                 hosts = fut.result()
             if hosts is not None:
                 return parts | {

@@ -34,9 +34,12 @@ also keeps the index correct for tables holding duplicate keys
 At 100 TB the difference is the probe shape: the bloom sidecar probe
 decodes O(live files) filters driver-side per lookup, while the RLI
 prunes by key span to a handful of sorted segments and answers with
-an executor-side scan of O(probe-span) index bytes — and a
+a scan of O(probe-span) index bytes — streamed on the driver when the
+pruned segments fit one scan split, executor-side above that — and a
 100M-row upsert batch tags its candidate files with one distributed
-join against the index instead of a driver loop.
+join against the index instead of a driver loop. A small commit's
+delta run is likewise sorted and written on the driver with pyarrow;
+bigger deltas and base builds keep the Spark global sort.
 """
 
 from __future__ import annotations
@@ -64,38 +67,53 @@ def write_entries(
     cid: str,
     key_col: str,
     max_records_per_file: int | None = None,
-    single_segment: bool = False,
 ) -> dict[str, list | None]:
-    """Stage ``df`` (``key, file, seq``) as sorted parquet segments and
-    move them under ``_rli/`` with commit-prefixed, writer-token names
-    (the data-file staging idiom — segments are immutable once moved;
-    the REGISTRATION in the commit manifest is the publish point, so a
-    failed commit leaves only unreferenced orphans for clean()).
-    Returns ``{segment_name: [key_lo, key_hi] | None}`` with spans read
-    from the parquet footer — no extra scan."""
-    import uuid
+    """Stage ``df`` (``key, file, seq``) as globally key-sorted parquet
+    segments and move them under ``_rli/`` with commit-prefixed,
+    writer-token names (the data-file staging idiom — segments are
+    immutable once moved; the REGISTRATION in the commit manifest is
+    the publish point, so a failed commit leaves only unreferenced
+    orphans for clean()). Returns ``{segment_name: [key_lo, key_hi] |
+    None}`` with spans read from the parquet footer — no extra scan."""
+    stage, token = _stage_dir(root, cid)
+    w = df.sort(key_col).write.mode("overwrite")
+    if max_records_per_file:
+        w = w.option("maxRecordsPerFile", str(max_records_per_file))
+    w.parquet(stage)
+    return _publish_stage(stage, root, cid, token, key_col)
 
-    from hudi_glue_spark.table.keyed_table import _parquet_footer_stats
+
+def write_entries_arrow(table, root: str, cid: str, key_col: str) -> dict:
+    """:func:`write_entries` for an entry table already on the driver
+    (a small commit's delta): sort with pyarrow and stage ONE segment,
+    under the same staging, naming and footer-span rules."""
+    import pyarrow.parquet as pq
+
+    stage, token = _stage_dir(root, cid)
+    os.makedirs(stage)
+    # dictionary pages only where they pay (few file names, one seq):
+    # dictionary-encoding the unique keys costs writer memory for nothing
+    pq.write_table(
+        table.sort_by(key_col),
+        os.path.join(stage, "part-00000.parquet"),
+        use_dictionary=["file", "seq"],
+    )
+    return _publish_stage(stage, root, cid, token, key_col)
+
+
+def _stage_dir(root: str, cid: str) -> tuple[str, str]:
+    import uuid
 
     token = uuid.uuid4().hex[:8]
     stage = os.path.join(root, ".tmp", f"rli-{cid}-{token}")
     shutil.rmtree(stage, ignore_errors=True)
-    # ``single_segment``: a SMALL delta (the per-commit advance path
-    # gates on the new files' on-disk bytes) sorts within one task —
-    # one Spark job producing one globally-sorted, exactly-spanned
-    # segment. A global sort() pays a range-partitioner SAMPLING job
-    # before the write: two jobs of fixed cost per commit for a
-    # delta that fits a single task anyway (r16, guide §5). Large
-    # builds/compactions keep the parallel global sort.
-    ordered = (
-        df.coalesce(1).sortWithinPartitions(key_col)
-        if single_segment
-        else df.sort(key_col)
-    )
-    w = ordered.write.mode("overwrite")
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", str(max_records_per_file))
-    w.parquet(stage)
+    return stage, token
+
+
+def _publish_stage(
+    stage: str, root: str, cid: str, token: str, key_col: str
+) -> dict[str, list | None]:
+    from hudi_glue_spark.table.keyed_table import _parquet_footer_stats
 
     out: dict[str, list | None] = {}
     d = rli_dir(root)
@@ -251,6 +269,51 @@ def prune_isin(segments: dict[str, list | None], probes_norm: list) -> list[str]
         if any(lo <= p <= hi for p in probes_norm):
             keep.append(name)
     return sorted(keep)
+
+
+def probe_hosts(
+    root: str, names: list[str], key_col: str, probes: list, max_bytes: int
+) -> set[str] | None:
+    """Files the named segments pair with any of ``probes``, answered
+    on the driver: each segment streams in record batches with its
+    ``file`` column dictionary-encoded (driver memory stays one batch,
+    not one segment) and keys match C-side with ``is_in``. Returns
+    None — the caller's Spark filter answers instead — when the
+    segments total more than ``max_bytes`` or the probe values do not
+    cast exactly to a segment's integer or string key type, so the
+    answer is always the Spark filter's host set."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    d = rli_dir(root)
+    paths = [os.path.join(d, n) for n in names]
+    if sum(os.path.getsize(p) for p in paths) > max_bytes:
+        return None
+    try:
+        want = pa.array(probes).drop_null()
+    except (pa.ArrowInvalid, pa.ArrowTypeError):
+        return None  # mixed or unrepresentable probe values
+    cast: dict = {}
+    hits: set[str] = set()
+    for p in paths:
+        with pq.ParquetFile(p, read_dictionary=["file"]) as pf:
+            kt = pf.schema_arrow.field(key_col).type
+            if kt not in cast:
+                same = (
+                    pa.types.is_integer(kt) and pa.types.is_integer(want.type)
+                ) or (pa.types.is_string(kt) and pa.types.is_string(want.type))
+                if not same:
+                    return None
+                try:
+                    cast[kt] = want.cast(kt)
+                except pa.ArrowInvalid:
+                    return None  # a probe out of the segment type's range
+            for b in pf.iter_batches(columns=[key_col, "file"]):
+                m = pc.is_in(b.column(0), value_set=cast[kt], skip_nulls=True)
+                if pc.any(m).as_py():
+                    hits.update(b.column(1).filter(m).unique().to_pylist())
+    return hits
 
 
 def entries_df(spark, root: str, names: list[str], key_field):

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import shutil
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,11 +42,6 @@ def test_dv_codec_union_and_bounds():
         DVB.from_positions([10], nrows=10)
     with pytest.raises(ValueError):
         DVB.union(a, DVB.from_positions([0], nrows=11))
-
-
-def test_dv_position_transport():
-    pos = np.array([7, 0, 3], dtype=np.int64)
-    assert DVB.decode_positions(DVB.encode_positions(pos)).tolist() == [0, 3, 7]
 
 
 # -- table fixtures ----------------------------------------------------------
@@ -813,7 +807,6 @@ def _poison_driver_dv_decode(monkeypatch):
         )
 
     monkeypatch.setattr(DVB, "positions", _poisoned)
-    monkeypatch.setattr(DVB, "decode_positions", _poisoned)
 
 
 def test_dv_diff_positions_never_materialize_on_driver(spark, monkeypatch):

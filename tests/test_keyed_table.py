@@ -1171,6 +1171,30 @@ def test_bloom_hash_family_tag_roundtrip():
         ]
 
 
+def test_bloom_unknown_hash_family_refused(spark, tmp_path, monkeypatch):
+    """A filter tagged with a hash-family code this reader does not know
+    (a newer writer's) is refused — probing it with another family's
+    hash would give silent false negatives."""
+    import struct
+
+    from hudi_glue_spark.table import bloom as B
+
+    raw = B.to_bytes(B.build(["a", "b"]))
+    bad = raw[:6] + struct.pack("<H", 7) + raw[8:]
+    with pytest.raises(ValueError, match="unknown bloom hash family code 7"):
+        B.from_bytes(bad)
+
+    # end to end: a table whose manifest shards carry code-7 filters
+    # refuses the bloom-pruned key read
+    monkeypatch.setitem(B._KIND_CODE, B.BLOOM_HASH, 7)
+    t = KeyedTable(str(tmp_path / "t"), key="pk", precombine="update_ts",
+                   partition_by="part", key_bloom=True)
+    ingest(t, day0(spark))
+    monkeypatch.setitem(B._KIND_CODE, B.BLOOM_HASH, 1)
+    with pytest.raises(ValueError, match="unknown bloom hash family code 7"):
+        t.read_keys(spark, [1]).collect()
+
+
 def test_bloom_poly_no_false_negatives_property():
     """Same property as the md5 family, for the poly1 family."""
     from hypothesis import given, settings
